@@ -23,7 +23,13 @@ Everything is lazy DataFrames end-to-end: the two strategies are the
 same plan shape with a different scoring expression, and the result
 schema is the one authoritative answer schema (the reference's
 declared response model drifts from what it actually returns —
-SURVEY §1.1 note)."""
+SURVEY §1.1 note).
+
+A request runs no Python: the question batch is a JVM-local inline
+relation (``sources.tables.local_rows``), and the stored index is
+read with a schema memoized on file identity
+(``sources.tables.read_parquet``), so the plan is JVM-only and pays
+no per-request schema-inference job."""
 
 from __future__ import annotations
 
@@ -34,10 +40,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import register
-from .sources.tables import cluster_by_dirs, load, spread
+from .sources.tables import cluster_by_dirs, load, local_rows, read_parquet, spread
 from .sources.tmputil import dir_tag, session_key, tmp_path
 from .functions.embed import dot, embed_df, embed_pandas
-from .operators.questions import GOLDEN_QUESTIONS, SNIPPET_LEN, TOP_K
+from .operators.questions import GOLDEN_QUESTIONS, QUESTIONS_DDL, SNIPPET_LEN, TOP_K
 
 _VECTOR_INDEX_READY: set[tuple] = set()
 
@@ -1264,12 +1270,19 @@ def run_query(
     Returns one row per (question, context chunk) with rank, score,
     snippet, a summary on the best chunk, and ``search_method`` —
     the reference's response shape normalized to a DataFrame.
+
+    The question batch is a JVM-local ``VALUES`` relation with the
+    ids and texts bound as SQL parameters (never pasted into SQL
+    text), so no Python worker runs per request; on the vector path
+    Catalyst folds the question embedding into that relation's
+    ``LocalTableScan``. An empty batch returns an empty frame of the
+    answer schema.
     """
     if questions is None:
         questions = GOLDEN_QUESTIONS
     if method not in ("vector", "keyword"):
         raise ValueError(f"unknown method {method!r}")
-    qdf = spark.createDataFrame(questions, "question_id INT, question_text STRING")
+    qdf = local_rows(spark, questions, QUESTIONS_DDL)
 
     if method == "vector":
         # Probe the STORED index: embed only the question batch (10
@@ -1277,7 +1290,7 @@ def run_query(
         # never re-embed the corpus inside a query (round-2 verdict:
         # the embed-per-query form cost 15 s vs <1 s warm here, and at
         # 100 TB it is a full corpus pass per question batch).
-        idx = spark.read.parquet(ensure_vector_index(spark, sf_dir))
+        idx = read_parquet(spark, ensure_vector_index(spark, sf_dir))
         qv = F.broadcast(embed_df(qdf, "question_text", out_col="qv"))
         scored = idx.crossJoin(qv).select(
             "question_id",
@@ -1351,10 +1364,12 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _api_oracle(method: str) -> str:
+def _api_oracle(
+    method: str, questions: list[tuple[int, str]] = GOLDEN_QUESTIONS
+) -> str:
     from .functions.embed import embed_subquery_sql
+    from .operators.questions import question_values_sql
 
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
     if method == "vector":
         qv = embed_subquery_sql("questions", "question_id", "question_text")
         dv = embed_subquery_sql("documents", "doc_id", "text")
@@ -1381,8 +1396,7 @@ scored AS (
 )"""
         tag = "text_search_fallback"
     return f"""
-WITH questions(question_id, question_text) AS (VALUES
-      {rows}),
+WITH {question_values_sql(questions)},
 {scored},
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY question_id
@@ -1406,13 +1420,12 @@ _RRF_DEPTH = 50  # per-retriever candidate depth before fusion
 
 def _rrf_oracle() -> str:
     from .functions.embed import embed_subquery_sql
+    from .operators.questions import question_values_sql
 
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
     qv = embed_subquery_sql("questions", "question_id", "question_text")
     dv = embed_subquery_sql("documents", "doc_id", "text")
     return f"""
-WITH questions(question_id, question_text) AS (VALUES
-      {rows}),
+WITH {question_values_sql()},
 qv AS (SELECT q.question_id, e.embedding AS v FROM {qv} e
        JOIN questions q ON e.id = q.question_id),
 dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),

@@ -320,14 +320,12 @@ _GOLDEN_SEARCH_TOP_K = 3
 
 
 def _golden_vector_search_sql() -> str:
-    from ..operators.questions import GOLDEN_QUESTIONS
+    from ..operators.questions import question_values_sql
 
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
     qv = embed_subquery_sql("questions", "question_id", "question_text")
     dv = embed_subquery_sql("documents", "doc_id", "text")
     return f"""
-WITH questions(question_id, question_text) AS (VALUES
-      {rows}),
+WITH {question_values_sql()},
 qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
 dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
 scored AS (

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import local_rows
+
 GOLDEN_QUESTIONS: list[tuple[int, str]] = [
     (1, "how does spark merge sort runs for a big table"),
     (2, "which query uses a hash join on the customer table"),
@@ -33,14 +35,16 @@ GOLDEN_QUESTIONS: list[tuple[int, str]] = [
 
 TOP_K = 3  # context chunks per answer (ref: src/main.py:103, 157)
 SNIPPET_LEN = 500  # fallback-answer content truncation (ref: src/main.py:147)
+QUESTIONS_DDL = "question_id INT, question_text STRING"  # schema of a question batch
 
 
 def questions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        GOLDEN_QUESTIONS, "question_id INT, question_text STRING"
+    return local_rows(spark, GOLDEN_QUESTIONS, QUESTIONS_DDL)
+
+
+def question_values_sql(questions: list[tuple[int, str]] = GOLDEN_QUESTIONS) -> str:
+    """The question batch as an oracle-side (DuckDB) ``questions`` CTE."""
+    rows = ",\n      ".join(
+        "({}, '{}')".format(i, t.replace("'", "''")) for i, t in questions
     )
-
-
-def question_values_sql() -> str:
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
     return f"questions(question_id, question_text) AS (VALUES\n      {rows})"

@@ -12,6 +12,7 @@ from __future__ import annotations
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -111,7 +112,63 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "value DOUBLE, props STRING"
         ).parquet(f"{sf_dir}/{name}.parquet")
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+# Inferred Parquet schemas keyed on file identity (path, mtime, size).
+# Only the StructType is kept, never a DataFrame: every read still
+# lists the files, so a rewritten path is seen on the next request.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the per-read schema job.
+
+    Schema inference runs a one-task Spark job on every read; on the
+    interactive path that is one of a request's four jobs. The
+    inferred schema is memoized on the path's identity — (path,
+    st_mtime_ns, st_size), the mtime keying of ``events_ts_unit`` plus
+    the size — and later reads pass it to ``spark.read.schema``, which
+    runs no job. A file rewritten in place, or a
+    directory rewritten by a Spark ``mode("overwrite")`` write (which
+    recreates the directory and renames its part files in), gets a new
+    identity and is inferred again.
+    """
+    import os
+
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side row list as an inline ``VALUES`` relation.
+
+    ``spark.createDataFrame`` ships the rows through a Python worker
+    (a ``PythonRDD`` stage per use). An inline table stays in the JVM:
+    it plans as a ``LocalTableScan``, and Catalyst folds deterministic
+    projections over it (an embedding of the rows, say) into the scan
+    itself. Every value is bound as a named SQL parameter cast to its
+    DDL type, so row contents never become SQL text. No rows gives an
+    empty relation of the same schema.
+    """
+    fields = StructType.fromDDL(ddl).fields
+    args: dict[str, object] = {}
+    tuples = []
+    for i, row in enumerate(rows or [(None,) * len(fields)]):
+        cells = []
+        for j, f in enumerate(fields):
+            args[f"v{i}_{j}"] = row[j]
+            cells.append(f"CAST(:v{i}_{j} AS {f.dataType.simpleString()})")
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    sql = f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})"
+    return spark.sql(sql if rows else sql + " WHERE false", args=args)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -708,6 +708,30 @@ def test_retrieval_never_embeds_corpus(name, spark):
         i += 1
 
 
+@pytest.mark.parametrize("method", ["vector", "keyword"])
+def test_run_query_questions_are_a_local_scan(method, spark):
+    """A ``run_query`` request is a JVM-only plan: the question batch
+    is an inline relation (LocalTableScan), not a Python-built RDD
+    (``Scan ExistingRDD`` over a ``PythonRDD`` — a Python worker stage
+    per request). On the vector path Catalyst folds the question
+    embedding into that scan, so ``qv`` is one of its output columns
+    and nothing above it re-embeds the questions."""
+    import re
+
+    from document_query_system_spark.api import run_query
+
+    df = run_query(spark, SF_DIR, [(1, "which join"), (2, "a sort")], method=method)
+    raw = plan_report(df).raw
+    assert "ExistingRDD" not in raw and "PythonRDD" not in raw
+    local = re.findall(r"\(\d+\) LocalTableScan\nOutput \[\d+\]: \[([^\]]*)\]", raw)
+    assert len(local) == 1, local
+    cols = [c.split("#")[0] for c in local[0].split(", ")]
+    assert cols[:2] == ["question_id", "question_text"], cols
+    if method == "vector":
+        assert "qv" in cols, cols
+        assert _EMBED_MARKER not in raw
+
+
 def test_ivf_layout_stats_reads_no_vector_bytes(spark):
     """The scaled-layout index-stats report (pipeline.ivf_layout_stats,
     r15 registration candidate) must compute its per-cell counts from

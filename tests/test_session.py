@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from document_query_system_spark.session import cluster_conf
 
 
@@ -29,8 +31,13 @@ def test_cluster_conf_static_invariants():
 
 
 def test_local_factory_does_not_use_cluster_sizing(spark):
-    # local[32] must run 32 shuffle partitions, not 16k.
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    # local[N] runs one shuffle partition per configured core (N =
+    # SPARK_GRAFT_CPUS, read with get_spark's default), never the
+    # cluster profile's 16k.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parts == cpus
+    assert parts * 100 <= int(cluster_conf()["spark.sql.shuffle.partitions"])
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
